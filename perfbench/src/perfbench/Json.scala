@@ -1,0 +1,33 @@
+package perfbench
+
+/** Minimal JSON encoder for the result record: maps, sequences,
+  * strings, numbers, booleans and null. */
+object Json {
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def value(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => value(x)
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else java.lang.Double.toString(d)
+    case f: Float => value(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] => obj(m.toSeq.map { case (k, x) => k.toString -> x })
+    case xs: Iterable[_] => xs.map(value).mkString("[", ",", "]")
+    case xs: Array[_] => value(xs.toSeq)
+    case other => str(other.toString)
+  }
+
+  def obj(fields: Seq[(String, Any)]): String =
+    fields.map { case (k, v) => str(k) + ":" + value(v) }.mkString("{", ",", "}")
+}
