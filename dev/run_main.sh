@@ -1,6 +1,13 @@
 #!/bin/bash
 # Run a graft main against the compiled classes WITHOUT sbt (no project
-# lock) — same JVM flags build.sbt passes to forked runs.
+# lock) — same JVM flags build.sbt passes to forked runs. The classes
+# dir (which also holds log4j2.properties) is found from this script's
+# location; the Spark jars from $SPARK_HOME, else from the spark-submit
+# on PATH.
+#
+#   dev/run_main.sh graft.Verify <sfDir> <outDir>
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+SPARK_HOME="${SPARK_HOME:-$(dirname "$(dirname "$(readlink -f "$(command -v spark-submit)")")")}"
 MAIN=$1; shift
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
@@ -18,5 +25,5 @@ exec java \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$SPARK_HOME/jars/*" \
   "$MAIN" "$@"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main. Each query is executed to completion through
   * the `noop` sink — unlike `.count()`, the noop write materializes every
@@ -11,43 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r18 (guide §2.2): coalesce post-shuffle partitions by BYTES, not
-      // down to the core count — the default parallelismFirst=true stops
-      // AQE's coalescing at `cpus` partitions, so at bench scale every
-      // shuffle stage runs `cpus` near-empty tasks whose fixed cost
-      // dominates (measured: the 6 shuffle-heaviest queries total
-      // 21.2 s vs 23.5 s over two interleaved A/B rounds). Bytes-based
-      // coalescing is the SCALE-ADAPTIVE setting (Spark's own docs
-      // recommend false): production-sized stages exceed the 64 MB
-      // advisory target and keep their parallelism; tiny stages stop
-      // paying per-task overhead. The driver's low-core scaling run
-      // inherits the same rule, so the comparison stays apples-to-apples.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // ... with a PARALLELISM FLOOR scaled to the session's cores:
-      // pure bytes-coalescing collapses small-byte but COMPUTE-DENSE
-      // stages to one task (measured r18: q_fuzzy_pairs' levenshtein
-      // verify went 3.8 → 11.8 s at 1 partition). r19 RE-MEASURED the
-      // floor after the hottest stage learned to protect itself
-      // (EditDist.keyLayout): removing it cost 158.5 → 187.9 s on the
-      // full suite — the damage concentrated in ~20 medium queries
-      // (q_curation_pipeline 4.8→8.1, q_dedup_* +60-100%) while the
-      // ~150-query tail moved by a +0.03 s median, i.e. the floor's
-      // extra tiny tasks cost nothing measurable. cpus/4 stays: it
-      // scales with the driver's low-core runs and is irrelevant at
-      // production sizes (stages above the 64 MB advisory never hit
-      // the floor).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        math.max(2, cpus.toInt / 4).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     // Warm-up: initialize the JVM/codegen/parquet-reader/shuffle/noop-sink
     // paths once so the first timed query isn't charged for JIT (the
     // first query otherwise absorbs ~5 s of warm-up and per-query numbers

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool: dump `.explain("formatted")` for named queries to files —
@@ -8,9 +7,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * `plans/<round>/<query>_<tag>.txt`.
   *
   * Usage: `runMain graft.PlanDump <sfDir> <outDir> <tag> [q_a,q_b,...]`
-  * (no query list = every registered query). The session mirrors the
-  * bench session (AQE on, same shuffle partitions, extensions) so the
-  * dumped static plan is the one the bench actually optimizes from.
+  * (no query list = every registered query). The session is the bench
+  * session ([[GraftSession]]) so the dumped static plan is the one the
+  * bench actually optimizes from.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,19 +17,7 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(1))
     val tag = args(2)
     val only = args.drop(3).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        math.max(2, cpus.toInt / 4).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     SparkEntry.warmFixtures(spark, sfDir)
     java.nio.file.Files.createDirectories(outDir)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)

@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
 object AnnJoin {
 
   /** Default per-task pair bound for hot-cell grid blocking — the ONE
-    * definition; [[graft.ScaleGrowth]]'s hot-cell growth gate references
+    * definition; ScaleGrowthSpec's hot-cell growth gate references
     * it so the measured threshold can never drift from the join's. */
   val DefaultBlockPairs: Long = 4L * 1000 * 1000
 

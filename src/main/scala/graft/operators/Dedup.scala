@@ -786,7 +786,7 @@ object Dedup {
   }
 
   /** [[simhashPairs]] with the signature width derived from the corpus
-    * size — the scale rule ScaleGrowth measured into place: a FIXED
+    * size — the scale rule ScaleGrowthSpec measured into place: a FIXED
     * 32-bit/4-band signature offers at most 4·2⁸ buckets, so mean bucket
     * occupancy grows linearly with the corpus (measured 10.5 → 22.3 over
     * a 10× clone at sf0.01) and the bucket self-join goes quadratic at
@@ -831,7 +831,7 @@ object Dedup {
     * Every repeated n-gram is an anchor, so a shared span of length L
     * yields L-n+1 anchors that coalesce into ONE maximal span — anchors
     * (the candidate volume) grow linearly in corpus clones
-    * (ScaleGrowth's spans family measures exactly that).
+    * (ScaleGrowthSpec's spans family measures exactly that).
     *
     * Digest equality stands in for gram equality at 2^-64-collision
     * odds — the content-addressed-dedup trade documented on
@@ -839,7 +839,7 @@ object Dedup {
     * document text afterwards. Tokenization is the corpus single-space
     * contract WITHOUT lowercasing ("verbatim" means byte-exact). */
   /** Positional n-gram digest occurrences `(id, pos, dg)` — the span
-    * family's measurement surface (ScaleGrowth counts anchors and
+    * family's measurement surface (ScaleGrowthSpec counts anchors and
     * digest occupancy off this frame). */
   private[graft] def spanOccurrences(df: DataFrame, idCol: Column, textCol: Column,
                                      n: Int): DataFrame = {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *
   * The naive bucket self-join puts ALL rows of one bucket key into one
   * task and enumerates c²/2 pairs there. Adaptive band widths keep the
-  * EXPECTED occupancy O(1), but content clusters are real — ScaleGrowth
+  * EXPECTED occupancy O(1), but content clusters are real — ScaleGrowthSpec
   * measured 2.8k-row buckets at sf0.1×10 even at the adaptive width, and
   * a 100 TB corpus's boilerplate cluster (empty pages, templated docs)
   * puts millions of rows behind one key: one task owns 10¹²⁺ pairs and

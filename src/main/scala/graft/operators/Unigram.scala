@@ -221,7 +221,7 @@ object Unigram {
     * doubles: deterministic per corpus (fixed iteration order over the
     * drained vocabulary) but NOT clone-bitwise like hard EM's integers
     * (Σ(R·f)·p accumulates differently from R·Σf·p in floating point)
-    * — hard EM stays the ScaleGrowth-gated scale-invariant mode.
+    * — hard EM stays the ScaleGrowthSpec-gated scale-invariant mode.
     * Returned [[Piece.count]] is the expected count rounded to nearest
     * (provenance); weights derive from the RAW doubles. */
   private def softEmLoop(multiSeed: Array[(String, Long)], singleSeed: Array[(String, Long)],

@@ -177,7 +177,7 @@ object DedupQueries extends QueryModule {
   /** SimHash near-dup MATCHING: banded bucket join over CORPUS-ADAPTIVE
     * signatures (4 bands of ⌈log₂ n⌉ ≥ 8 bits each — a fixed 32-bit
     * signature's 4·2⁸ bucket space saturates as the corpus grows;
-    * ScaleGrowth measured occupancy 10.5 → 22.3 over a 10× clone, the
+    * ScaleGrowthSpec measured occupancy 10.5 → 22.3 over a 10× clone, the
     * road to all-pairs) + native `hamming_dist` verification at radius
     * 2. The signature frame is pinned inside the adaptive wrapper (it
     * feeds both sides of the bucket self-join; same caller cache

@@ -448,7 +448,7 @@ object TextQueries extends QueryModule {
     * frequency-weighted adjacent symbol pairs — over the
     * [[tokenizerMix]] α-sample instead of the raw corpus: the actual
     * first iteration a shared multilingual BPE training run takes (the
-    * iterative argmax loop stays BpeSpec/ScaleGrowth territory, as for
+    * iterative argmax loop stays BpeSpec/ScaleGrowthSpec territory, as for
     * q_bpe_pairs). The oracle chains router + sampling replays into
     * the pair-count replay, so a drifted admission anywhere reorders
     * the counts and mismatches. */

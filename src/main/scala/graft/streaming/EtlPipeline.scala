@@ -16,7 +16,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *       with null-fill (§2.9) → J1 left merge
   *     → silver chunked JSON write (K4)
   *     → gold keyed KPI upsert (K2/J2/A1-A4)
-  *     → consumed files auto-archived (K5, `cleanSource=archive`)
+  *     → consumed files archived (K5, `cleanSource=archive`) one batch
+  *       late: batch N's files move when batch N+1 is planned, so a
+  *       drain leaves its last batch's files in the queue (see
+  *       [[FileQueue]])
   *
   * Checkpointing upgrades the reference's at-least-once list→move loop
   * to exactly-once within Spark. Each micro-batch is a normal batch

@@ -10,6 +10,11 @@ import org.apache.spark.sql.types.StructType
   * loop and upgrades it to exactly-once within Spark via the checkpoint
   * WAL; `cleanSource=archive` IS the move-after-processing contract.
   *
+  * Archival lags one batch: the file source moves batch N's files when
+  * it plans batch N+1, not when batch N commits. A drain (for example
+  * `Trigger.AvailableNow`) therefore leaves its LAST batch's files in
+  * `srcDir` until a later run on the same checkpoint plans a batch.
+  *
   * `maxFilesPerTrigger=10` mirrors the reference's download wave of 10
   * (`extractor.go:93`); `latestFirst=false` keeps arrival order (O1).
   */

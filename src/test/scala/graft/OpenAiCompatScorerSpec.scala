@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicInteger
 
 /** The production HTTP scorer against an in-process stub
@@ -20,9 +21,14 @@ class OpenAiCompatScorerSpec extends AnyFunSuite {
   import spark.implicits._
 
   /** Start a one-route stub server; `handler` maps the raw request body
-    * to (status, responseBody). Returns (baseUrl, stop). */
-  private def withServer(handler: String => (Int, String))(f: String => Unit): Unit = {
+    * to (status, responseBody). With `threads` > 1 the server answers
+    * that many requests at once; by default its dispatcher thread
+    * serves them one at a time. `f` gets the base URL. */
+  private def withServer(handler: String => (Int, String), threads: Int = 1)(
+      f: String => Unit): Unit = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val pool = Option.when(threads > 1)(Executors.newFixedThreadPool(threads))
+    pool.foreach(server.setExecutor)
     requests.clear()
     server.createContext("/v1/chat/completions", (ex: HttpExchange) => {
       val req = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -36,7 +42,7 @@ class OpenAiCompatScorerSpec extends AnyFunSuite {
     })
     server.start()
     try f(s"http://127.0.0.1:${server.getAddress.getPort}/v1")
-    finally server.stop(0)
+    finally { server.stop(0); pool.foreach(_.shutdownNow()) }
   }
 
   @volatile private var lastRequest: Option[(String, String)] = None
@@ -188,15 +194,14 @@ class OpenAiCompatScorerSpec extends AnyFunSuite {
   }
 
   test("the in-flight window OVERLAPS requests: 4-deep beats sequential on one task") {
-    // The §2.9 concurrency claim as a regression gate (the measured
-    // record lives in PLANS.md via graft.EnrichBench, which this reuses
-    // for the stub): 8 batches of 25 on ONE task against a server whose
-    // only cost is 120 ms of simulated inference — sequential pays
-    // 8 × 120 ms, a genuinely-overlapping 4-deep window pays ~2 waves.
-    // A window that silently serialized (e.g. a one-thread pool or a
-    // blocking submit) fails the 0.7 ratio regardless of JIT noise.
-    val (server, base, calls) = EnrichBench.startStub(120)
-    try {
+    // The §2.9 concurrency claim as a regression gate: 8 batches of 25
+    // on ONE task against a server whose only cost is 120 ms of
+    // simulated inference — sequential pays 8 × 120 ms, a
+    // genuinely-overlapping 4-deep window pays ~2 waves. A window that
+    // silently serialized (e.g. a one-thread pool or a blocking submit)
+    // fails the 0.7 ratio regardless of JIT noise. The server answers
+    // 8 requests at once, so it is never the serialization point.
+    withServer(req => { Thread.sleep(120); (200, completionFor(req)) }, threads = 8) { base =>
       // fresh session conf: shuffle partitions = 1 pins the whole corpus
       // onto one task, the reference's single-process shape — total
       // concurrency is then exactly the in-flight window under test
@@ -206,18 +211,18 @@ class OpenAiCompatScorerSpec extends AnyFunSuite {
       val one = (1 to 200).map(i => (i.toLong, s"review text $i"))
         .toDF("item_id", "review")
       def wall(inflight: Int): Double = {
-        calls.set(0)
+        requests.clear()
         val t0 = System.nanoTime()
         val out = Enrich.enrich(one, scorer(base),
           EnrichConfig(batchSize = 25, inflight = inflight))
         assert(out.filter(out("sentiment").isNotNull).count() == 200)
-        assert(calls.get() == 8, s"expected 8 batch calls, saw ${calls.get()}")
+        assert(requests.size == 8, s"expected 8 batch calls, saw ${requests.size}")
         (System.nanoTime() - t0) / 1e9
       }
       val seq = wall(1) // runs first: any JIT warm-up inflates the SLOW side
       val four = wall(4)
       assert(four < seq * 0.7,
         f"in-flight 4 took $four%.2fs vs sequential $seq%.2fs — the window is not overlapping requests")
-    } finally server.stop(0)
+    }
   }
 }

@@ -5,15 +5,16 @@ import graft.sources.StatsIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev tool: MEASURE (not argue) the scale-growth claims behind the
-  * LSH-family candidate generation — VERDICT r6 gap #3, extended to
-  * 100× clones in round 8 (VERDICT r7 #5).
+/** Scale-growth measurement functions behind ScaleGrowthSpec: MEASURE
+  * (not argue) the scale-growth claims of the LSH-family candidate
+  * generation and of every other family whose cost could grow faster
+  * than its input.
   *
-  * Builds an `R`-times-larger corpus with the SAME duplicate rate as
-  * the input (each replica is token-perturbed for text / element-rotated
-  * for vectors, so documents are near-dups only WITHIN a replica and the
-  * near-dup structure of each replica is exactly the original's), then
-  * records, at each requested scale:
+  * Each function builds an `R`-times-larger corpus with the SAME
+  * duplicate rate as the input (each replica is token-perturbed for
+  * text / element-rotated for vectors, so documents are near-dups only
+  * WITHIN a replica and the near-dup structure of each replica is
+  * exactly the original's), then records, at that scale:
   *
   *  - band-bucket count, mean/max occupancy, and the within-bucket pair
   *    total (what the bucket self-join enumerates);
@@ -25,20 +26,13 @@ import org.apache.spark.sql.functions._
   * are content hashes and the vocabulary grows with the corpus).
   * Super-linear growth in any row is a design bug. The fixed-width
   * simhash family is the KNOWN counterexample kept as the control: its
-  * 1024-bucket space saturates, so it only runs at scale ≤ 10 — at 100×
-  * merely COUNTING its ~10¹¹ bucket pairs is infeasible, which is the
-  * point the adaptive family exists to fix.
+  * 1024-bucket space saturates, so at 100× merely COUNTING its ~10¹¹
+  * bucket pairs is infeasible, which is the point the adaptive family
+  * exists to fix.
   *
-  * Output is a markdown table pasted into PLANS.md per round; the
-  * occupancy-band regression gate lives in ScaleGrowthSpec and reuses
-  * these measurement functions, so the gate cannot drift from the
-  * published methodology.
-  *
-  * Usage: `runMain graft.ScaleGrowth [sfDir] [scalesCsv] [docs|emb|all]`,
-  * e.g. `runMain graft.ScaleGrowth /root/testdata/sf0.1 1,10,100 all` —
-  * the third arg restricts to the document families (minhash/simhash) or
-  * the embedding families (ann-lsh/embed-banded) so a partial run can be
-  * completed without re-measuring the other half.
+  * ScaleGrowthSpec gates the claims over a 10× clone of sf0.01. The
+  * 1×/10×/100× tables recorded at sf0.1 in PLANS.md came from these
+  * same functions.
   */
 object ScaleGrowth {
 
@@ -966,299 +960,5 @@ object ScaleGrowth {
       require(ladder.length == k, s"kcenter: expected $k rows, got ${ladder.length}")
       KCenterGrowth(rows, k, cur, ladder.last.getLong(2), wall)
     } finally scope.close()
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val scales = args.drop(1).headOption.getOrElse("1,10").split(",").map(_.trim.toInt).toSeq
-    val families = args.drop(2).headOption.getOrElse("all")
-    require(Set("docs", "spans", "emb", "index", "bpe", "annjoin", "fuzzy", "lm", "clf",
-        "curation", "neardup", "tokmix", "kcenter", "all")(families),
-      s"families must be docs|spans|emb|index|bpe|annjoin|fuzzy|lm|clf|curation|neardup|tokmix|kcenter|all, got $families")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def row(family: String, scale: Int, st: FamilyStats): Unit =
-      println(f"| $family | ${scale}x | ${st.rows} | ${st.buckets} | ${st.meanOcc}%.2f | " +
-        f"${st.maxOcc} | ${st.bucketPairs} | ${st.candidates} | ${st.verified} |")
-
-    println("| family | scale | rows | buckets | mean occ | max occ | bucket pairs | candidates | verified |")
-    println("|---|---|---|---|---|---|---|---|---|")
-
-    val indexRows = scala.collection.mutable.ArrayBuffer[String]()
-    val curationRows = scala.collection.mutable.ArrayBuffer[String]()
-    val bpeRows = scala.collection.mutable.ArrayBuffer[String]()
-    val lmRows = scala.collection.mutable.ArrayBuffer[String]()
-    val annjoinRows = scala.collection.mutable.ArrayBuffer[String]()
-    val neardupRows = scala.collection.mutable.ArrayBuffer[String]()
-    val tokmixRows = scala.collection.mutable.ArrayBuffer[String]()
-    scales.foreach { s =>
-      // iteration-local pins (the scaled inputs each family re-reads);
-      // closed before the end-of-scale session sweep
-      val iterScope = new graft.operators.CacheScope
-      if (families == "docs" || families == "all") {
-        val docs = iterScope.pin(
-          scaledDocs(Tables.documents(spark, sfDir).select("doc_id", "text"), s))
-        val nDocs = docs.count()
-        row("minhash-lsh (k=8,w=2)", s, minhashStats(docs, nDocs))
-        // the saturating control: quadratic by design, unmeasurable at 100×
-        if (s <= 10) row("simhash-fixed (4x8b)", s, simhashStats(docs, nDocs, w = 8))
-        else println(s"| simhash-fixed (4x8b) | ${s}x | $nDocs | (skipped: 1024-bucket space saturates — ~n²/2048 pairs) | | | | | |")
-        val (wS, aStats) = simhashAdaptiveStats(docs, nDocs)
-        row(s"simhash-adaptive (4x${wS}b)", s, aStats)
-        row("simjoin-prefix (3gram,t=0.6)", s, simjoinStats(docs, nDocs))
-      }
-      if (families == "spans" || families == "all") {
-        val docs = iterScope.pin(
-          scaledDocs(Tables.documents(spark, sfDir).select("doc_id", "text"), s))
-        row("spans-exact (8gram)", s, spansStats(docs, docs.count()))
-      }
-      if (families == "fuzzy" || families == "all") {
-        val names = iterScope.pin(scaledNames(
-          Tables.customer(spark, sfDir).select(col("c_name").as("name")).distinct(),
-          s))
-        row("editdist-prefix (k=1,q=3)", s, editDistStats(names, names.count()))
-      }
-      if (families == "emb" || families == "all") {
-        val dim = 64
-        val p = iterScope.pin(Similarity.prep(
-          scaledEmb(Tables.embeddings(spark, sfDir).select("vec_id", "embedding"), s, dim),
-          col("vec_id"), col("embedding")))
-        val nVec = p.count()
-        val (bits, annStats) = annLshStats(p, nVec, dim)
-        row(s"ann-lsh (adaptive ${bits}b)", s, annStats)
-        val (width, embStats) = embedBandedStats(p, nVec, dim)
-        row(s"embed-banded (4x${width}b)", s, embStats)
-      }
-      if (families == "index" || families == "all") {
-        val docs = iterScope.pin(
-          scaledDocs(Tables.documents(spark, sfDir).select("doc_id", "text"), s))
-        val idxDir = new java.io.File(
-          s"${sys.props("java.io.tmpdir")}/graft_scalegrowth_index_$s")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(idxDir)
-        val ig = textIndexGrowth(spark, docs, idxDir.toString, deltas = 3,
-          files = 8 * s, probeTerms = Seq("vector", "scan", "merge"))
-        indexRows += (f"| text-index (3 deltas, ${8 * s} files) | ${s}x | ${ig.rows} | " +
-          f"${ig.segments} | ${ig.seg0Rows} | ${ig.deltaRowsMin}-${ig.deltaRowsMax} | " +
-          f"${ig.tombstones} | ${ig.admittedFiles}/${ig.totalFiles} | " +
-          f"${ig.matchedPostings} | ${ig.liveRows} |")
-        rm(idxDir)
-      }
-      if (families == "annjoin" || families == "all") {
-        val g = annJoinGrowth(spark,
-          Tables.embeddings(spark, sfDir).select("vec_id", "embedding"), s, dim = 64)
-        annjoinRows += (f"| annjoin-cells (stride 31) | ${s}x | ${g.rows} | ${g.cells} | " +
-          f"${g.meanProduct}%.1f | ${g.maxProduct} | ${g.candidates} | ${g.hotCells} |")
-      }
-      if (families == "lm" || families == "all") {
-        val docs = iterScope.pin(clonedDocs(
-          Tables.documents(spark, sfDir).select("doc_id", "text"), s))
-        val g = lmGrowth(docs)
-        lmRows += (f"| ngram-lm (bigram) | ${s}x | ${g.rows} | ${g.modelRows} | " +
-          f"${g.vocab} | ${g.scored} |")
-        val g3 = lm3Growth(docs)
-        lmRows += (f"| ngram-lm (trigram backoff) | ${s}x | ${g3.rows} | ${g3.modelRows} | " +
-          f"${g3.vocab} | ${g3.scored} |")
-        val g5 = lm5Growth(docs)
-        lmRows += (f"| ngram-lm (5-gram backoff) | ${s}x | ${g5.rows} | ${g5.modelRows} | " +
-          f"${g5.vocab} | ${g5.scored} |")
-      }
-      if (families == "clf" || families == "all") {
-        // the q_quality_clf planted-domain view (every third doc is
-        // the reference domain) — the operating point the queries ship
-        val labeled = iterScope.pin(clonedLabeled(
-          Tables.documents(spark, sfDir)
-            .select(col("doc_id"),
-              when(col("doc_id") % 3 === 0,
-                concat(col("text"), lit(" curated reference corpus marker" * 3)))
-                .otherwise(col("text")).as("text"),
-              when(col("doc_id") % 3 === 0, 1).otherwise(-1).as("y")),
-          s))
-        val g = clfRatesGrowth(labeled, n = 3, dim = 512)
-        lmRows += (f"| quality-clf rates (3-gram, 512+1) | ${s}x | ${g.rows} | " +
-          f"${g.weightRows} | — | ${g.nKeep} |")
-        val gp = clfGrowth(labeled, n = 3, dim = 512, epochs = 3)
-        lmRows += (f"| quality-clf perceptron (3 epochs) | ${s}x | ${gp.rows} | " +
-          f"${gp.weightRows} | — | ${gp.nKeep} |")
-        // multi-class lang-ID rates: the model must be L·(dim+1)-row
-        // bounded and (gated in ScaleGrowthSpec) bit-invariant
-        val langLab = iterScope.pin(clonedLabeled(
-          Tables.documents(spark, sfDir).select("doc_id", "text", "lang"), s))
-        val lg = langIdGrowth(langLab, n = 3, dim = 512)
-        lmRows += (f"| langid-rates (3-gram, 512+1, multi-class) | ${s}x | ${lg.rows} | " +
-          f"${lg.modelRows} | — | — |")
-      }
-      if (families == "bpe" || families == "all") {
-        val docs = iterScope.pin(clonedDocs(
-          Tables.documents(spark, sfDir).select("doc_id", "text"), s))
-        // Drain path at production-shaped merge counts: wall must be
-        // dominated by the ONE corpus fold, near-flat in nMerges (the
-        // distributed control's wall is ~nMerges × fixed job overhead,
-        // linear by construction — the round-9 scale killer).
-        def bpeRow(tag: String, nMerges: Int, maxWords: Long): Unit = {
-          val g = bpeGrowth(spark, docs, nMerges, maxWords)
-          val head = g.rules.take(3).map(r => s"${r.lhs}+${r.rhs}").mkString(" ")
-          bpeRows += (f"| bpe-train ($tag) | ${s}x | ${g.rows} | ${g.vocab} | " +
-            f"${g.trainWall}%.1f | ${g.rules.size} | $head |")
-        }
-        bpeRow("16 merges, drain", 16, Bpe.DriverDrainMaxWords)
-        bpeRow("2000 merges, drain", 2000, Bpe.DriverDrainMaxWords)
-        val ug = unigramGrowth(spark, docs, vocabSize = 200, seedSize = 1000)
-        val uhead = ug.model.take(3).map(p => s"${p.piece}:${p.count}").mkString(" ")
-        bpeRows += (f"| unigram-train (200 pieces, 2 EM iters) | ${s}x | ${ug.rows} | " +
-          f"${ug.vocab} | ${ug.trainWall}%.1f | ${ug.model.size} | $uhead |")
-        // WordPiece at the scale-calibrated floor (2·R — the clone-
-        // invariance law); the row records which path the drain gate
-        // picked at this scale
-        val wg = wordpieceGrowth(spark, docs, nMerges = 16, minFreq = 2L * s)
-        val whead = wg.merges.take(3).map(m => s"${m.lhs}+${m.rhs}").mkString(" ")
-        bpeRows += (f"| wordpiece-train (16 merges, floor 2R, " +
-          f"${if (wg.drained) "drain" else "distributed"}) | ${s}x | ${wg.rows} | " +
-          f"${wg.vocab} | ${wg.trainWall}%.1f | ${wg.merges.size} | $whead |")
-        if (s == 1) {
-          bpeRow("16 merges, distributed ctl", 16, 0L)
-          // The plain fixture's 31-word vocabulary dries out at ~107
-          // rules; a PRODUCTION-shaped merge count needs a production-
-          // shaped vocabulary. 20 distinct 8-hex-char words per doc →
-          // ~100k distinct words over a 17-symbol alphabet: thousands
-          // of live merges, measured on the drain path.
-          val rich = iterScope.pin(Tables.documents(spark, sfDir).select(col("doc_id"),
-            concat_ws(" ", transform(sequence(lit(1), lit(20)),
-              i => substring(md5(concat(col("doc_id").cast("string"),
-                lit(":"), i.cast("string"))), 1, 8))).as("text")))
-          val g = bpeGrowth(spark, rich, nMerges = 2000)
-          val head = g.rules.take(3).map(r => s"${r.lhs}+${r.rhs}").mkString(" ")
-          bpeRows += (f"| bpe-train (2000 merges, drain, hash-vocab) | ${s}x | ${g.rows} | " +
-            f"${g.vocab} | ${g.trainWall}%.1f | ${g.rules.size} | $head |")
-        }
-      }
-      if (families == "curation" || families == "all") {
-        val g = curationFunnelGrowth(spark, Tables.documents(spark, sfDir), s)
-        curationRows += (f"| curation-funnel (frozen 1x models) | ${s}x | ${g.input} | " +
-          f"${g.gate} | ${g.clf} | ${g.lm} | ${g.exact} | ${g.wall}%.1f |")
-        val t0 = System.nanoTime()
-        val ml = multilingualGrowth(spark, Tables.documents(spark, sfDir), s)
-        val mlWall = (System.nanoTime() - t0) / 1e9
-        ml.foreach(m => curationRows += (
-          f"| multilingual-funnel ${m.lang} (frozen 1x router+LMs) | ${s}x | " +
-            f"${m.routed} | — | — | ${m.lmKept} | ${m.dedupKept} | " +
-            f"${mlWall / ml.size}%.1f |"))
-      }
-      if (families == "tokmix") {
-        val t0 = System.nanoTime()
-        val g = tokenizerMixGrowth(spark, Tables.documents(spark, sfDir), s)
-        val wall = (System.nanoTime() - t0) / 1e9
-        g.langs.foreach { case (l, r, sm, e) =>
-          tokmixRows += (f"| tokmix $l (frozen 1x router, T=1/2) | ${s}x | $r | " +
-            f"$sm | $e%.1f | ${g.topPairs.take(3).map(p => p._1 + "+" + p._2).mkString(" ")} | ${wall / g.langs.size}%.1f |")
-        }
-      }
-      // quadratic-by-design pair graph inside variant cliques: not in
-      // "all" (R=100 cliques alone mean ~5k pairs per original) — run
-      // explicitly with modest scales, e.g. `1,3,10 neardup`
-      if (families == "neardup") {
-        val t0 = System.nanoTime()
-        val nd = multilingualNearDupGrowth(spark, Tables.documents(spark, sfDir), s)
-        val ndWall = (System.nanoTime() - t0) / 1e9
-        nd.foreach(m => neardupRows += (
-          f"| neardup-by-lang ${m.lang} (frozen 1x router) | ${s}x | ${m.routed} | " +
-            f"${m.exactDistinct} | ${m.candPairs} | ${m.verPairs} | ${m.keep} | " +
-            f"${ndWall / nd.size}%.1f |"))
-      }
-      if (families == "kcenter" || families == "all") {
-        val g = kcenterGrowth(spark,
-          Tables.embeddings(spark, sfDir).select("vec_id", "embedding"), s, k = 8)
-        curationRows += (f"| kcenter (k=8) | ${s}x | ${g.rows} | ${g.jobs} jobs | — | — | " +
-          f"${g.lastDist} | ${g.wall}%.1f |")
-      }
-      if (families == "curation" || families == "all") {
-        // fixed-budget boilerplate strip over the PERTURBED clone (the
-        // ScaleGrowthSpec trial's transform): the top-M budget is
-        // corpus-independent, so stripped volume must stay in a
-        // constant band — a plain clone would instead scale the
-        // occurrence volume of the same 150 grams linearly (fixed
-        // LIST, growing corpus), which is the other true law, not the
-        // budget claim under test
-        val docsB = iterScope.pin(scaledDocs(Tables.documents(spark, sfDir)
-          .select("doc_id", "text").filter(col("text").isNotNull), s))
-        val nB = docsB.count()
-        val tB = System.nanoTime()
-        val stripped = graft.operators.Dedup.boilerplateSpans(
-            docsB, col("doc_id"), col("text"), n = 3, topM = 150)
-          .agg(sum("span_tokens")).head() match {
-            case r if r.isNullAt(0) => 0L
-            case r => r.getLong(0)
-          }
-        curationRows += (f"| boilerplate strip (3gram, top-150) | ${s}x | $nB | " +
-          f"stripped $stripped | — | — | — | ${(System.nanoTime() - tB) / 1e9}%.1f |")
-        // temperature mixture: admissions track the analytic policy
-        val docsT = iterScope.pin((0 until s).map { r =>
-          val d = Tables.documents(spark, sfDir).select("doc_id", "lang")
-          if (r == 0) d else d.withColumn("doc_id", col("doc_id") + lit(r * ReplicaOffset))
-        }.reduce(_ unionByName _))
-        val nT = docsT.count()
-        val tT = System.nanoTime()
-        val adm = graft.operators.Sample.temperatureMix(
-          docsT, col("doc_id"), col("lang")).count()
-        curationRows += (f"| temperature-mix (isqrt, div 4) | ${s}x | $nT | " +
-          f"admitted $adm | — | — | — | ${(System.nanoTime() - tT) / 1e9}%.1f |")
-      }
-      iterScope.close()
-      // backstop sweep: localCheckpoint blocks and any pin a measured
-      // operator left in the returned plan are not scope-tracked
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-    if (annjoinRows.nonEmpty) {
-      println()
-      println("| family | scale | rows | cells | mean cell product | max product | candidates | hot cells |")
-      println("|---|---|---|---|---|---|---|---|")
-      annjoinRows.foreach(println)
-    }
-    if (bpeRows.nonEmpty) {
-      println()
-      println("| family | scale | rows | vocab | train wall (s) | rules | first merges |")
-      println("|---|---|---|---|---|---|---|")
-      bpeRows.foreach(println)
-    }
-    if (lmRows.nonEmpty) {
-      println()
-      println("| family | scale | rows | model n-grams | successor vocab | docs scored |")
-      println("|---|---|---|---|---|---|")
-      lmRows.foreach(println)
-    }
-    if (curationRows.nonEmpty) {
-      println()
-      println("| family | scale | input | gate | clf | lm | exact/dist | wall (s) |")
-      println("|---|---|---|---|---|---|---|---|")
-      curationRows.foreach(println)
-    }
-    if (neardupRows.nonEmpty) {
-      println()
-      println("| family | scale | routed | exact distinct | cand pairs | verified pairs | keep | wall/lang (s) |")
-      println("|---|---|---|---|---|---|---|---|")
-      neardupRows.foreach(println)
-    }
-    if (tokmixRows.nonEmpty) {
-      println()
-      println("| family | scale | routed | sampled | analytic exp | top pairs | wall/lang (s) |")
-      println("|---|---|---|---|---|---|---|")
-      tokmixRows.foreach(println)
-    }
-    if (indexRows.nonEmpty) {
-      println()
-      println("| family | scale | rows | segments | seg0 rows | delta seg rows | tombstones | probe files adm/total | matched postings | live rows |")
-      println("|---|---|---|---|---|---|---|---|---|---|")
-      indexRows.foreach(println)
-    }
-    spark.stop()
   }
 }

@@ -2,18 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run (forked JVM). */
+/** One shared local session for the whole test run (forked JVM): the
+  * bench configuration of [[GraftSession]] at four cores. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
     // static conf; a temp dir keeps bucketed-table tests out of the repo
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
