@@ -1,10 +1,10 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, count, lit}
 
-import java.sql.{Connection, DriverManager}
+import java.sql.{Connection, DriverManager, SQLException}
 import java.util.Properties
+import scala.util.control.NonFatal
 
 /** Keyed upsert into a REAL JDBC database — the production spelling of
   * [[Sinks.upsertByKey]]'s MERGE algebra (the reference upserts its
@@ -17,7 +17,9 @@ import java.util.Properties
   *      Spark's JDBC DDL mapping, whose Derby string type is CLOB —
   *      non-comparable in a MERGE ON), then the batch lands in it via
   *      Spark's parallel JDBC writer (one INSERT stream per partition);
-  *   2. merge: ONE upsert statement, spelled per [[UpsertDialect]]:
+  *   2. check: one `GROUP BY <keys> HAVING COUNT(*) > 1` count over the
+  *      STAGED rows (plain SQL, the same on Derby and Postgres);
+  *   3. merge: ONE upsert statement, spelled per [[UpsertDialect]]:
   *      ANSI `MERGE INTO target USING stg ON keys` (Derby, Oracle, SQL
   *      Server, DB2, Postgres ≥15) or Postgres-native `INSERT … SELECT
   *      … ON CONFLICT (keys) DO UPDATE` — the reference's actual store
@@ -25,25 +27,25 @@ import java.util.Properties
   *      (`data_loader.py:54-60`), where the ON CONFLICT spelling works
   *      on EVERY version (MERGE needs 15+). One statement runs in one
   *      transaction, so readers never observe a half-applied batch;
-  *   3. drop the staging table (also on failure).
+  *   4. drop the staging table (also on failure).
   *
   * Retry contract (the `foreachBatch` question): re-running the same
   * batch re-updates rows to the values they already hold — upsert
   * is IDEMPOTENT per batch, which is exactly what a streaming sink
   * needs under Structured Streaming's at-least-once `foreachBatch`
   * replay. Duplicate keys WITHIN one batch are rejected loudly before
-  * any write (SQL MERGE raises a cardinality violation mid-statement
-  * otherwise — this surfaces it as a clear precondition instead):
-  * aggregate the batch to one row per key first, as the KPI queries do.
-  * The batch is persisted before the check so the rows VALIDATED are
-  * the rows WRITTEN — a nondeterministic input plan re-evaluating
-  * differently between the check and the staging write cannot smuggle
-  * duplicates past the precondition.
+  * the MERGE touches the target (SQL MERGE raises a cardinality
+  * violation mid-statement otherwise — this surfaces it as a clear
+  * precondition instead): aggregate the batch to one row per key
+  * first, as the KPI queries do. The check reads the staging table,
+  * i.e. exactly the rows the MERGE would read, so a nondeterministic
+  * input plan cannot smuggle duplicates past it and the batch plan is
+  * evaluated once (no persist, no Spark-side count jobs).
   *
   * Scale shape: the batch never funnels through the driver — executors
-  * write partitions straight to the staging table; the driver runs two
-  * constant-size DDL/DML statements. The database is the bottleneck by
-  * design (it is the serving store, not the analytics path). Identifier
+  * write partitions straight to the staging table; the driver runs
+  * constant-size DDL/DML statements only. The database is the bottleneck
+  * by design (it is the serving store, not the analytics path). Identifier
   * hygiene: table/column names must be plain SQL identifiers (letters,
   * digits, underscore) — anything else is rejected, never interpolated.
   *
@@ -117,37 +119,54 @@ object JdbcMerge {
     * Postgres ≥15, where both spellings work). */
   def mergeInto(batch: DataFrame, url: String, table: String, keys: Seq[String],
                 props: Properties, d: UpsertDialect): Unit = {
+    checkBatch(batch, keys, table)
+    val conn = DriverManager.getConnection(url, props)
+    try stageAndMerge(conn, batch, url, table, keys, props, d)(())
+    finally conn.close()
+  }
+
+  private def checkBatch(batch: DataFrame, keys: Seq[String], tables: String*): Unit = {
     require(keys.nonEmpty, "JdbcMerge: at least one key column required")
-    val cols = batch.columns.toSeq
-    val missing = keys.filterNot(cols.contains)
+    val missing = keys.filterNot(batch.columns.contains)
     require(missing.isEmpty, s"JdbcMerge: key column(s) ${missing.mkString(", ")} not in batch")
-    (table +: cols).foreach(checkIdent)
-    // Pin the batch so the dup-check and the staging write read the SAME
-    // materialized rows (MEMORY_AND_DISK: eviction spills, never
-    // recomputes a possibly-nondeterministic input plan). The count()
-    // below materializes it as a side effect of the check.
-    val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (tables ++ batch.columns).foreach(checkIdent)
+  }
+
+  /** The body both entry points share: stage `batch`, reject duplicate
+    * keys among the STAGED rows, then run the upsert and `sameTx` in ONE
+    * transaction on `conn` (rolled back if either fails). The staging
+    * table is dropped on every path. */
+  private def stageAndMerge(conn: Connection, batch: DataFrame, url: String, table: String,
+                            keys: Seq[String], props: Properties, d: UpsertDialect)(
+                            sameTx: => Unit): Unit = {
+    val cols = batch.columns.toSeq
+    val staging = s"${table}_stg_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+    exec(conn, s"CREATE TABLE $staging AS SELECT * FROM $table WITH NO DATA")
     try {
-      val dups = pinned.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > 1).limit(1).count()
-      require(dups == 0,
-        s"JdbcMerge: batch has multiple rows per key (${keys.mkString(", ")}) — " +
-          "aggregate to one row per key before upserting")
-      val staging = s"${table}_stg_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-      val conn = DriverManager.getConnection(url, props)
+      batch.write.mode("append").jdbc(url, staging, props)
+      val k = keys.mkString(", ")
+      val st = conn.createStatement()
+      val dups = try {
+        val rs = st.executeQuery(
+          s"SELECT COUNT(*) FROM (SELECT $k FROM $staging GROUP BY $k HAVING COUNT(*) > 1) d")
+        rs.next(); rs.getLong(1)
+      } finally st.close()
+      require(dups == 0, s"JdbcMerge: batch has multiple rows per key ($k) — " +
+        "aggregate to one row per key before upserting")
+      conn.setAutoCommit(false)
       try {
-        exec(conn, s"CREATE TABLE $staging AS SELECT * FROM $table WITH NO DATA")
-        pinned.write.mode("append").jdbc(url, staging, props)
         exec(conn, d match {
           case UpsertDialect.AnsiMerge => mergeStatement(table, staging, cols, keys)
           case UpsertDialect.PostgresOnConflict => onConflictStatement(table, staging, cols, keys)
         })
-      } finally {
-        try exec(conn, s"DROP TABLE $staging")
-        catch { case _: java.sql.SQLException => () } // create itself failed — nothing staged
-        conn.close()
-      }
-    } finally pinned.unpersist(blocking = false)
+        sameTx
+        conn.commit()
+      } catch { case NonFatal(e) => conn.rollback(); throw e }
+      finally conn.setAutoCommit(true)
+    } finally {
+      try exec(conn, s"DROP TABLE $staging")
+      catch { case _: SQLException => () }
+    }
   }
 
   /** The `writeStream.foreachBatch` adapter: each micro-batch becomes
@@ -179,70 +198,47 @@ object JdbcMerge {
     *
     * The ledger table is created on first use (create-then-swallow —
     * portable across Derby/Postgres, which lack a common IF NOT
-    * EXISTS); one ledger serves every sink table in the database. */
+    * EXISTS; see [[ensureLedger]]); one ledger serves every sink table
+    * in the database. */
   def mergeIntoLedgered(batch: DataFrame, url: String, table: String, keys: Seq[String],
                         batchId: Long, props: Properties = new Properties,
                         ledger: String = LedgerTable): Boolean = {
-    require(keys.nonEmpty, "JdbcMerge: at least one key column required")
-    val cols = batch.columns.toSeq
-    val missing = keys.filterNot(cols.contains)
-    require(missing.isEmpty, s"JdbcMerge: key column(s) ${missing.mkString(", ")} not in batch")
-    (table +: ledger +: cols).foreach(checkIdent)
-    val d = UpsertDialect.forUrl(url)
+    checkBatch(batch, keys, table, ledger)
     val conn = DriverManager.getConnection(url, props)
     try {
-      try exec(conn, s"CREATE TABLE $ledger (" +
-        "sink_table VARCHAR(128) NOT NULL, batch_id BIGINT NOT NULL, " +
-        "applied_at TIMESTAMP DEFAULT CURRENT_TIMESTAMP, " +
-        "PRIMARY KEY (sink_table, batch_id))")
-      catch { case _: java.sql.SQLException => () } // exists (or SELECT below fails loudly)
-      def applied(): Boolean = {
-        val st = conn.prepareStatement(
-          s"SELECT 1 FROM $ledger WHERE sink_table = ? AND batch_id = ?")
-        try {
-          st.setString(1, table); st.setLong(2, batchId)
-          val rs = st.executeQuery()
-          try rs.next() finally rs.close()
-        } finally st.close()
+      def onKey[T](sql: String)(run: java.sql.PreparedStatement => T): T = {
+        val st = conn.prepareStatement(sql)
+        try { st.setString(1, table); st.setLong(2, batchId); run(st) } finally st.close()
       }
-      if (applied()) return false // replay of a committed batch: skip wholesale
-      val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val dups = pinned.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > 1).limit(1).count()
-        require(dups == 0,
-          s"JdbcMerge: batch has multiple rows per key (${keys.mkString(", ")}) — " +
-            "aggregate to one row per key before upserting")
-        val staging = s"${table}_stg_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-        exec(conn, s"CREATE TABLE $staging AS SELECT * FROM $table WITH NO DATA")
-        try {
-          pinned.write.mode("append").jdbc(url, staging, props)
-          // merge + ledger mark: ONE transaction — commit both or neither
-          conn.setAutoCommit(false)
-          try {
-            exec(conn, d match {
-              case UpsertDialect.AnsiMerge => mergeStatement(table, staging, cols, keys)
-              case UpsertDialect.PostgresOnConflict => onConflictStatement(table, staging, cols, keys)
-            })
-            val ins = conn.prepareStatement(
-              s"INSERT INTO $ledger (sink_table, batch_id) VALUES (?, ?)")
-            try { ins.setString(1, table); ins.setLong(2, batchId); ins.executeUpdate() }
-            finally ins.close()
-            conn.commit()
-            true
-          } catch {
-            case e: java.sql.SQLException =>
-              conn.rollback()
-              // lost the PK race to a concurrent apply of the same batch:
-              // its commit carries the rows; ours correctly vanishes
-              if (applied()) false else throw e
-          } finally conn.setAutoCommit(true)
-        } finally {
-          try exec(conn, s"DROP TABLE $staging")
-          catch { case _: java.sql.SQLException => () }
+      def applied(): Boolean = onKey(
+        s"SELECT 1 FROM $ledger WHERE sink_table = ? AND batch_id = ?")(_.executeQuery().next())
+      val replay = try applied() catch { // fails only while the ledger is missing
+        case _: SQLException => ensureLedger(url, props, ledger); applied()
+      }
+      if (replay) false // replay of a committed batch: skip wholesale
+      else try {
+        stageAndMerge(conn, batch, url, table, keys, props, UpsertDialect.forUrl(url)) {
+          onKey(s"INSERT INTO $ledger (sink_table, batch_id) VALUES (?, ?)")(_.executeUpdate())
         }
-      } finally pinned.unpersist(blocking = false)
+        true
+      } catch {
+        // lost the PK race to a concurrent apply of the same batch: its
+        // commit carries the rows; ours correctly rolled back
+        case _: SQLException if applied() => false
+      }
     } finally conn.close()
+  }
+
+  /** Create the ledger table unless it exists; a failure other than
+    * "exists" surfaces at the ledger SELECT that follows. */
+  def ensureLedger(url: String, props: Properties = new Properties,
+                   ledger: String = LedgerTable): Unit = {
+    val conn = DriverManager.getConnection(url, props)
+    try exec(conn, s"CREATE TABLE ${checkIdent(ledger)} (" +
+      "sink_table VARCHAR(128) NOT NULL, batch_id BIGINT NOT NULL, " +
+      "applied_at TIMESTAMP DEFAULT CURRENT_TIMESTAMP, PRIMARY KEY (sink_table, batch_id))")
+    catch { case _: SQLException => () }
+    finally conn.close()
   }
 
   /** [[foreachBatchMerge]] upgraded to exactly-once: the micro-batch id

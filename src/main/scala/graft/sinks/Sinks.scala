@@ -5,8 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import java.util.UUID
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 /** Sink layer (SURVEY.md §2.2): gold JSON snapshot (K1), keyed upsert
   * (K2), parallel multi-table load (K3), chunked writes (K4), archive
@@ -40,12 +39,23 @@ object Sinks {
   /** K3 — parallel multi-table load (`data_loader.py:63-66` runs 3
     * upserts in threads): independent write jobs submitted concurrently;
     * Spark's scheduler runs them in parallel (FIFO across jobs). */
-  def loadAll(tables: Map[String, DataFrame], dir: String, timeout: Duration = Duration("10min")): Unit = {
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val futs = tables.map { case (name, df) =>
-      Future(df.write.mode("overwrite").parquet(s"$dir/$name"))
-    }
-    Await.result(Future.sequence(futs), timeout)
+  def loadAll(tables: Map[String, DataFrame], dir: String): Unit =
+    concurrently(tables.toSeq.map { case (t, df) =>
+      () => df.write.mode("overwrite").parquet(s"$dir/$t") }: _*)
+
+  /** Run each leg on a thread of its own; once ALL have finished, rethrow
+    * the first failure (later ones suppressed). The calling thread starts
+    * the threads, so they inherit its Spark local properties (streaming
+    * batch id, job group) — a shared pool like `ExecutionContext.global` would not. */
+  def concurrently(legs: (() => Unit)*): Unit = {
+    val pool = Executors.newFixedThreadPool(math.max(1, legs.size))
+    try {
+      val futs = legs.map(leg => pool.submit(new Callable[Unit] { def call(): Unit = leg() }))
+      val errors = futs.flatMap { f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      errors.headOption.foreach { e => errors.tail.foreach(e.addSuppressed); throw e }
+    } finally pool.shutdown()
   }
 
   /** K4 — 50k-row chunked JSON write (`loader.go:92-113`, chunk size at

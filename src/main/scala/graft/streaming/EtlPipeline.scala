@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{DenseId, Enrich, EnrichConfig, Kpis, Scorer}
-import graft.sinks.Sinks
+import graft.sinks.{JdbcMerge, Sinks}
 import graft.sources.Bronze
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -49,7 +49,6 @@ object EtlPipeline {
       cfg: EnrichConfig = EnrichConfig(),
       trigger: Trigger = Trigger.AvailableNow(),
       servingUrl: Option[String] = None,
-      scoreCols: Seq[String] = Seq("signal"),
       validate: Seq[graft.operators.Constraints.Check] = Nil,
       quarantineDir: Option[String] = None): StreamingQuery = {
     require(validate.isEmpty || quarantineDir.nonEmpty,
@@ -101,15 +100,12 @@ object EtlPipeline {
             batch.withColumn("signal", productSignal),
             Seq(col("id"), col("shop_id"), col("product_name"), col("date")),
             "item_id")
-          // §2.9 + J1. The enriched frame feeds TWO actions (silver
-          // write, gold KPI upsert) — pin it so the scorer runs ONCE per
-          // batch: an uncached plan would re-invoke the model for the
-          // second action, doubling LLM calls. Released by the
-          // batch scope below (clearCache remains the backstop).
-          // scoreCols picks what the scorer sees per row: the default
-          // `signal` feeds the deterministic test scorer; a production
-          // OpenAiCompatScorer takes the raw review text instead
-          // (scoreCols = Seq("description"), reviewCol = "description")
+          // §2.9 + J1 fused (enrichCarry: no item_id join, one pass over
+          // the dense-id frame). Scorers read their columns by name:
+          // `signal` (the test scorer), or the review text. The enriched
+          // frame feeds several actions — pin it so the scorer runs ONCE
+          // per batch (an uncached plan re-invokes the model per action).
+          // Released by the batch scope below (clearCache: backstop).
           val batchScope = new graft.operators.CacheScope
           // ADVICE r17: the release below must survive a failing batch
           // body (a JDBC merge or gold-write exception would otherwise
@@ -117,9 +113,7 @@ object EtlPipeline {
           // per-batch accumulation this scope exists to prevent), so
           // the whole body rides try/finally like CdcStream/DedupStream.
           try {
-          val analysis = Enrich.enrich(
-            items.select(("item_id" +: scoreCols).map(col): _*), scorer, cfg)
-          val enriched = batchScope.pin(Enrich.merge(items.drop("signal"), analysis))
+          val enriched = batchScope.pin(Enrich.enrichCarry(items, scorer, cfg).drop("signal"))
           // K4 silver (50k-row chunks in production; here per micro-batch)
           Sinks.chunkedWrite(enriched, s"$silverDir/batch_$batchId")
           // K2 gold: upsert this batch's user KPIs into the keyed table
@@ -186,12 +180,14 @@ object EtlPipeline {
             // (and pinning a full TABLE rewrite in executor memory would
             // not survive real table sizes anyway).
             fs.delete(migTmp, true)
-            merged.write.mode("overwrite").partitionBy("kbucket").parquet(migTmp.toString)
+            merged.repartition(col("kbucket")) // one file per bucket
+              .write.mode("overwrite").partitionBy("kbucket").parquet(migTmp.toString)
             Sinks.swapIn(fs, migTmp, goldPath, migBackup)
           } else {
             // materialize BEFORE the write: the merge read the very
-            // partitions the dynamic overwrite replaces
-            val pinned = merged.localCheckpoint(true)
+            // partitions the dynamic overwrite replaces; clustered so
+            // each touched bucket is ONE file, not one per shuffle partition
+            val pinned = merged.repartition(col("kbucket")).localCheckpoint(true)
             pinned.write
               .mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
@@ -213,20 +209,21 @@ object EtlPipeline {
           // `date` is renamed `day`: DATE is a reserved word in most
           // serving dialects and JdbcMerge interpolates identifiers
           // unquoted by design.
+          // The legs run CONCURRENTLY (K3); a failed leg fails the batch,
+          // and a replay skips the legs already committed. The ledger is
+          // created before the fan-out so the legs never race to create it.
           servingUrl.foreach { url =>
-            graft.sinks.JdbcMerge.mergeIntoLedgered(
-              kpis.drop("kbucket")
-                .withColumn("average_spent", col("average_spent").cast("double")),
-              url, "user_kpis", Seq("id"), batchId)
-            graft.sinks.JdbcMerge.mergeIntoLedgered(
-              Kpis.shopKpis(enriched, scope = batchScope)
-                .withColumn("average_profit", col("average_profit").cast("double")),
-              url, "shop_kpis", Seq("shop_id"), batchId)
-            graft.sinks.JdbcMerge.mergeIntoLedgered(
-              Kpis.dateKpis(enriched).withColumnRenamed("date", "day")
-                .withColumn("average_profit_per_day",
-                  col("average_profit_per_day").cast("double")),
-              url, "date_kpis", Seq("day"), batchId)
+            val user = kpis.drop("kbucket")
+              .withColumn("average_spent", col("average_spent").cast("double"))
+            val shop = Kpis.shopKpis(enriched, scope = batchScope)
+              .withColumn("average_profit", col("average_profit").cast("double"))
+            val date = Kpis.dateKpis(enriched).withColumnRenamed("date", "day")
+              .withColumn("average_profit_per_day", col("average_profit_per_day").cast("double"))
+            JdbcMerge.ensureLedger(url)
+            Sinks.concurrently(
+              () => JdbcMerge.mergeIntoLedgered(user, url, "user_kpis", Seq("id"), batchId),
+              () => JdbcMerge.mergeIntoLedgered(shop, url, "shop_kpis", Seq("shop_id"), batchId),
+              () => JdbcMerge.mergeIntoLedgered(date, url, "date_kpis", Seq("day"), batchId))
           }
           // (the dynamic path's checkpoint blocks are freed by the RDD
           // sweep below — Dataset.unpersist is a no-op for

@@ -133,7 +133,7 @@ class EtlFailureInjectionSpec extends AnyFunSuite {
         OpenAiCompatScorer(baseUrl, "test-model", "Classify sentiment.",
           reviewCol = "description", timeoutMs = scorerTimeoutMs),
         EnrichConfig(batchSize = 5, retries = 1, timeout = Duration("3s")),
-        servingUrl = Some(url), scoreCols = Seq("description"))
+        servingUrl = Some(url))
       assert(q.awaitTermination(180000),
         s"$tag: trigger did not complete under injected failures")
     }

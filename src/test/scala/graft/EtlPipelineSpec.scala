@@ -242,6 +242,37 @@ class EtlPipelineSpec extends AnyFunSuite {
       Set("user_0", "user_1", "user_2", "user_3"))
   }
 
+  test("gold upsert writes ONE parquet file per bucket, on the first batch and on the upsert") {
+    val base = Files.createTempDirectory("graft_etl_layout_").toString
+    val bronze = s"$base/bronze/new"
+    new java.io.File(bronze).mkdirs()
+    // rows i < 1000 belong to 40 users spread over (nearly) every
+    // bucket; each row i >= 1000 is a user of its own
+    def rows(is: Seq[Int]): Array[Byte] = is.map { i =>
+      val user = if (i < 1000) i % 40 else i
+      productJson(i).replace(s""""id":"user_${i % 4}"""", s""""id":"user_$user"""")
+    }.mkString("\n").getBytes
+    def runAndCheck(file: String, is: Seq[Int]): Unit = {
+      Files.write(java.nio.file.Paths.get(bronze, file), rows(is))
+      val q = EtlPipeline.start(spark, bronze, s"$base/archive", s"$base/silver",
+        s"$base/gold", s"$base/ckpt",
+        SentimentScorer("signal", failEvery = 0, flakyEvery = 0),
+        EnrichConfig(batchSize = 5))
+      q.awaitTermination(120000)
+      val buckets = new java.io.File(s"$base/gold/user_kpis").listFiles()
+        .filter(_.getName.startsWith("kbucket=")).toSeq
+      assert(buckets.size > 1, s"$file: expected several buckets")
+      val perBucket = buckets.map(b => b.getName -> b.listFiles().count(_.getName.endsWith(".parquet")))
+      assert(perBucket.forall(_._2 == 1), s"$file: parquet files per bucket: $perBucket")
+    }
+    runAndCheck("d1.json", 0 until 120)
+    // second batch: half of the old users (an upsert of touched buckets) plus new ones
+    runAndCheck("d2.json", (0 until 120 by 2) ++ (1000 until 1020))
+    val gold = spark.read.parquet(s"$base/gold/user_kpis")
+    assert(gold.select("id").distinct().count() == gold.count(), "one row per user")
+    assert(gold.count() == 60)
+  }
+
   test("validate-before-publish: a bad batch is quarantined, the stream and good batches proceed") {
     import graft.operators.Constraints.Satisfies
     import org.apache.spark.sql.functions.col

@@ -12,8 +12,10 @@ import java.sql.DriverManager
   * reference KPI tables round-tripping with conflict-key updates,
   * (2) JDBC MERGE ≡ the in-engine [[Sinks.upsertByKey]] algebra on the
   * same inputs, (3) replay idempotence (the foreachBatch retry story),
-  * (4) the loud duplicate-key precondition, and (5) a live
-  * `writeStream.foreachBatch` upsert across micro-batches. */
+  * (4) the loud duplicate-key precondition on both entry points (target,
+  * ledger and catalog untouched), (5) a live `writeStream.foreachBatch`
+  * upsert across micro-batches, and (6) concurrent first use of the
+  * ledger. */
 class JdbcMergeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -29,6 +31,26 @@ class JdbcMergeSpec extends AnyFunSuite {
 
   private def readTable(table: String): DataFrame =
     spark.read.jdbc(url, table, new java.util.Properties)
+
+  private def query(url: String, sql: String): Seq[String] = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val rs = conn.createStatement().executeQuery(sql)
+      val b = Seq.newBuilder[String]
+      while (rs.next()) b += rs.getString(1)
+      b.result()
+    } finally conn.close()
+  }
+
+  /** Staging tables of `table` still in the catalog (Derby upper-cases
+    * unquoted identifiers). */
+  private def stagingLeft(table: String): Seq[String] =
+    query(url, "SELECT TABLENAME FROM SYS.SYSTABLES " +
+      s"WHERE TABLENAME LIKE '${table.toUpperCase}\\_STG\\_%' ESCAPE '\\'")
+
+  private def ledgerIds(url: String, table: String): Seq[Long] =
+    query(url, s"SELECT batch_id FROM ${JdbcMerge.LedgerTable} WHERE sink_table = '$table'")
+      .map(_.toLong).sorted
 
   test("three KPI tables round-trip with conflict-key updates; MERGE equals upsertByKey algebra") {
     ddl("CREATE TABLE user_kpis (user_id BIGINT NOT NULL PRIMARY KEY, avg_spend DOUBLE, n_orders BIGINT)")
@@ -68,9 +90,55 @@ class JdbcMergeSpec extends AnyFunSuite {
       JdbcMerge.mergeInto(dupes, url, "dup_tgt", Seq("k"))
     }
     assert(readTable("dup_tgt").count() == 1, "failed batch must not leave partial rows")
+    assert(stagingLeft("dup_tgt").isEmpty, s"staging tables left: ${stagingLeft("dup_tgt")}")
     intercept[IllegalArgumentException] { // hostile identifier never reaches SQL
       JdbcMerge.mergeInto(Seq((1L, 1.0)).toDF("k", "v"), url, "dup_tgt; DROP TABLE x", Seq("k"))
     }
+  }
+
+  test("ledgered merge rejects duplicate keys; target, ledger and catalog are unchanged") {
+    ddl("CREATE TABLE dup_ledger (k BIGINT NOT NULL PRIMARY KEY, v DOUBLE)")
+    assert(JdbcMerge.mergeIntoLedgered(Seq((1L, 1.0)).toDF("k", "v"), url, "dup_ledger",
+      Seq("k"), batchId = 0L))
+    // the duplicate key sits in different partitions, so no single task sees both rows
+    val dupes = Seq((2L, 2.0), (3L, 3.0), (2L, 4.0)).toDF("k", "v").repartition(3)
+    intercept[IllegalArgumentException] {
+      JdbcMerge.mergeIntoLedgered(dupes, url, "dup_ledger", Seq("k"), batchId = 1L)
+    }
+    assert(readTable("dup_ledger").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
+      Map(1L -> 1.0), "a rejected batch changed the target")
+    assert(ledgerIds(url, "dup_ledger") == Seq(0L), "a rejected batch was marked applied")
+    assert(stagingLeft("dup_ledger").isEmpty,
+      s"staging tables left: ${stagingLeft("dup_ledger")}")
+    // the rejected id is still free: the corrected batch applies under it
+    assert(JdbcMerge.mergeIntoLedgered(Seq((2L, 2.0), (3L, 3.0)).toDF("k", "v"), url,
+      "dup_ledger", Seq("k"), batchId = 1L))
+    assert(ledgerIds(url, "dup_ledger") == Seq(0L, 1L))
+  }
+
+  test("concurrent first use of the ledger: three tables, one batch id, all apply") {
+    val fresh = "jdbc:derby:memory:graftledgerrace;create=true"
+    val tables = Seq("race_a", "race_b", "race_c")
+    val conn = DriverManager.getConnection(fresh)
+    try tables.foreach(t => conn.createStatement().execute(
+      s"CREATE TABLE $t (k BIGINT NOT NULL PRIMARY KEY, v DOUBLE)"))
+    finally conn.close()
+    val batches = tables.map(t => t -> Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v"))
+    val start = new java.util.concurrent.CyclicBarrier(tables.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size)
+    val applied =
+      try batches.map { case (t, b) =>
+        pool.submit(new java.util.concurrent.Callable[Boolean] {
+          def call(): Boolean = {
+            start.await() // no ledger yet: all three race to create it
+            JdbcMerge.mergeIntoLedgered(b, fresh, t, Seq("k"), batchId = 5L)
+          }
+        })
+      }.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      finally pool.shutdown()
+    assert(applied == Seq(true, true, true))
+    assert(query(fresh, s"SELECT sink_table FROM ${JdbcMerge.LedgerTable}").sorted == tables)
+    tables.foreach(t => assert(spark.read.jdbc(fresh, t, new java.util.Properties).count() == 2))
   }
 
   test("a multi-partition 10k-row batch lands through concurrent executor connections") {
